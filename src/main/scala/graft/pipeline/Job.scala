@@ -34,11 +34,16 @@ object Job {
   /** Execute one full run. `now` is injectable for deterministic tests.
     *
     * `incremental = true` refreshes the latest-wins silver models, the
-    * SCD2 metadata model, silver_videos, and the channel fact by MERGING
-    * only bronze partitions newer than the previous run's snapshot
-    * (partition-pruned scan — refresh cost scales with new data, the
-    * reference's `CREATE OR REFRESH` promise); the remaining models (the
-    * dims and dim_date — all small) recompute. Falls back to a full
+    * SCD2 metadata model, silver_videos, the channel fact and the four
+    * dims by MERGING only bronze partitions at or after the previous
+    * successful run's snapshot (partition-pruned scan — refresh cost
+    * scales with new data, the reference's `CREATE OR REFRESH` promise);
+    * the static ISO dim recomputes. The merges run LEVEL-PARALLEL through
+    * the same scheduler as the full refresh ([[Silver.refreshParallel]]
+    * with `since`): each level's models run concurrently, the levels
+    * follow [[Silver.Model.deps]] (SCD2 → silver_videos, silver_channels →
+    * channel fact, facts → dim_date, ISO reference → dim_country), and a
+    * level settles fully before the next starts. Falls back to a full
     * refresh on the first run.
     *
     * `cdfRefresh = true` upgrades EVERY silver model from snapshot-driven
@@ -146,8 +151,9 @@ object Job {
 
       // stage: silver MV refresh (level-order parallel — the reference runs
       // dbt with 4 threads; identity with sequential refresh is spec-pinned)
-      // then gold marts. Incremental mode merges only new bronze partitions
-      // into the latest-wins models and recomputes the rest.
+      // then gold marts. Incremental mode runs the same levels, merging
+      // only new bronze partitions into the incremental models and
+      // recomputing the rest.
       // change-feed mode covers EVERY silver model — no snapshot path runs:
       //   level 0: the six latest-wins models drain their bronze change
       //            feeds through durable cursors (cost ∝ changed rows,
@@ -159,7 +165,8 @@ object Job {
       //   level 2: the calendar dim folds per-source date counts from the
       //            five fact feeds and re-assembles only when one ticked.
       // Each level's drains run parallel like refreshParallel (disjoint
-      // sources/targets — serializing would sum the straggler chains).
+      // sources/targets — serializing would sum the straggler chains), and
+      // every drain SETTLES before anything proceeds (Silver.settle).
       // SINGLE-DRIVER REFRESH LEASE: two concurrent cdfRefresh runs share
       // one cursor tree, and the ticks are NOT safe to interleave — a fold
       // pins its rebuild reads at ITS drained frontier, so an older-range
@@ -173,27 +180,7 @@ object Job {
       val feedModels: Set[String] =
         if (!cdfRefresh) Set.empty
         else {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: ExecutionContext = ExecutionContext.global
-          // every drain SETTLES before anything proceeds — a fail-fast
-          // await would leak the still-running drains to race finalize,
-          // maintenance, and even the next run's cursors. A multi-model
-          // incident must not masquerade as a single-model one: every
-          // other drain's failure rides the thrown exception as a
-          // suppressed cause instead of being silently discarded.
-          def drainLevel(work: Seq[() => Any]): Unit = {
-            val settled = Await.result(
-              Future.sequence(work.map(w => Future(scala.util.Try(w())))),
-              Duration.Inf)
-            settled.collectFirst { case scala.util.Failure(t) =>
-              settled.collect { case scala.util.Failure(o) if o ne t => o }
-                .foreach(t.addSuppressed)
-              throw t
-            }
-            ()
-          }
-          drainLevel(
+          Silver.settle(
             Silver.latestWinsSpecs.keys.toSeq.map(n => () =>
               Silver.refreshFromChangeFeed(lake, n, feedCursorDir(lake, n))) :+
             (() => if (!lake.exists("silver", "dim_country_reference"))
@@ -215,7 +202,7 @@ object Job {
             Silver.resetDimDateChannelCounts(lake, feedCursorDir(lake, "dim_date"))
             Gold.resetChannelSummaryFeed(lake)
           }
-          drainLevel(Seq(
+          Silver.settle(Seq(
             () => Silver.refreshVideoModelsFromChangeFeed(
               lake, feedCursorDir(lake, "video_models")),
             () => Silver.refreshChannelFactFromChangeFeed(
@@ -232,27 +219,10 @@ object Job {
             Silver.assembleDimDate(lake)
           Silver.models.map(_.name).toSet
         }
-      prevSnapshot match {
-        case Some(since) =>
-          (Silver.latestWinsSpecs.keySet -- feedModels)
-            .foreach(n => Silver.refreshIncremental(lake, n, since))
-          // SCD2 before silver_videos (current-flag FK); the channel fact
-          // after silver_channels (its top-1 cross-join input, merged above)
-          // dims last: the observed-value dims merge from fresh bronze; the
-          // calendar dim unions dates observed in the fresh partitions
-          Seq("silver_video_metadata_scd2", "silver_videos",
-              "fact_channel_daily_metrics",
-              "dim_traffic_source", "dim_device", "dim_country", "dim_date")
-            .filterNot(feedModels.contains)
-            .foreach(n => Silver.refreshIncremental(lake, n, since))
-          Silver.refreshParallel(lake,
-            Some(Silver.models.map(_.name).toSet -- Silver.incrementalModels -- feedModels))
-        case None =>
-          // Some(all-names) when feedModels is empty ≡ None — one path;
-          // full-coverage change-feed mode leaves this set EMPTY
-          Silver.refreshParallel(lake,
-            Some(Silver.models.map(_.name).toSet -- feedModels))
-      }
+      // Some(all-names) when feedModels is empty ≡ None — one path;
+      // full-coverage change-feed mode leaves this set EMPTY
+      Silver.refreshParallel(lake,
+        Some(Silver.models.map(_.name).toSet -- feedModels), since = prevSnapshot)
       // stage: gold marts. Change-feed mode rebuilds only the grains the
       // bronze feeds name (Gold.refreshFromChangeFeeds), each dep capped at
       // the version its SILVER consumer folded this run — gold never

@@ -29,9 +29,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Materialized tables carry a SINGLE-WRITER TRANSACTION LOG — the
   * minimal slice of what Delta's `_delta_log` provides the reference:
   * each refresh writes a fresh immutable `_v{N}` data directory, then
-  * commits by atomically renaming a `_VERSION` manifest (version number +
-  * live file list) over the previous one. Readers resolve the manifest
-  * first, so they observe either the old version or the new one — never
+  * commits by atomically renaming a `_VERSION` manifest (version number,
+  * the schema just written as a `#schema` line, and the live file list)
+  * over the previous one. Readers resolve the manifest first and scan its
+  * files under that schema (opening a table infers nothing from parquet
+  * footers), so they observe either the old version or the new one — never
   * a half-written directory — and a crash at ANY point of a refresh
   * leaves the previous committed version live (the old
   * delete-then-rename swap had a window where the table was briefly
@@ -130,8 +132,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         // the LOG's schema (older files yield null for later-added columns;
         // renamed columns coalesce through their chain — see colMapOf)
         readEntriesWithDv(base, snap.schema, snap.entries, colMapOf(base))
-      case None =>
-        spark.read.parquet(currentDataDir(layer, name).toString)
+      case None => // materialized: the manifest's live files under its logged
+        // schema; only plain layouts and pre-schema manifests infer it
+        committedPruned(base, Nil) match {
+          case (paths, _, Some(schema)) => spark.read.schema(schema).parquet(paths: _*)
+          case _ => spark.read.parquet(currentDataDir(layer, name).toString)
+        }
     }
   }
 
@@ -3552,19 +3558,29 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     bronzeVersions(base).lastOption match {
       case Some(v) => prunedAtVersionMetered(base, v, preds)
       case None =>
-        val dd = currentDataDir(layer, name)
-        // `_VERSION` manifests are always full snapshots (materialized
-        // tables rewrite whole versions — no delta records to resolve;
-        // the materialized layout never carries deletion vectors)
-        readRecord(base.resolve(ManifestName)) match {
-          case Some(rec) if rec.adds.nonEmpty =>
-            (rec.adds.filter(e => ManifestStats.mightMatch(e, preds))
-              .map(e => (dd.resolve(e.relPath).toString, Option.empty[String])),
-              rec.adds.size)
-          case _ => (Seq((dd.toString, Option.empty[String])), 0)
-        }
+        val (paths, held, _) = committedPruned(base, preds)
+        (paths.map((_, Option.empty[String])), held)
     }
   }
+
+  /** A materialized table's stats-pruned live files, the number of manifest
+    * entries held, and the schema its manifest logged — all from ONE read
+    * of `_VERSION`, so the files and the schema are of the same version.
+    * `_VERSION` manifests are always full snapshots (materialized tables
+    * rewrite whole versions — no delta records to resolve; the
+    * materialized layout never carries deletion vectors). A manifest
+    * without entries, or a plain layout without a manifest, yields its
+    * data directory. */
+  private def committedPruned(base: Path, preds: Seq[ManifestStats.StatPred])
+      : (Seq[String], Int, Option[org.apache.spark.sql.types.StructType]) =
+    readRecord(base.resolve(ManifestName)) match {
+      case Some(rec) =>
+        val dd = base.resolve(s"_v${rec.version}")
+        if (rec.adds.isEmpty) (Seq(dd.toString), 0, rec.schema)
+        else (rec.adds.filter(e => ManifestStats.mightMatch(e, preds))
+          .map(e => dd.resolve(e.relPath).toString), rec.adds.size, rec.schema)
+      case None => (Seq(base.toString), 0, None)
+    }
 
   /** Stats-pruned file paths AS OF any retained bronze version: the twin
     * read ([[resolvePrunedDistributed]]) works at every version, not just
@@ -3648,11 +3664,17 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   def tableWhere(layer: String, name: String,
       preds: Seq[ManifestStats.StatPred]): DataFrame = {
     val base = dir(layer, name)
-    val (pruned, _) = prunedFilePathsMetered(layer, name, preds)
-    // schema via header peeks — resolving the full snapshot here (even on
-    // the no-match path) would re-materialize the very O(live-files) entry
-    // list the distributed prune exists to avoid
-    val light = if (bronzeVersions(base).nonEmpty) logSchemaLight(base) else None
+    // bronze schema via header peeks — resolving the full snapshot here
+    // (even on the no-match path) would re-materialize the very
+    // O(live-files) entry list the distributed prune exists to avoid; a
+    // materialized table's schema comes with its pruned files
+    val (pruned, light) =
+      if (bronzeVersions(base).nonEmpty)
+        (prunedFilePathsMetered(layer, name, preds)._1, logSchemaLight(base))
+      else {
+        val (paths, _, schema) = committedPruned(base, preds)
+        (paths.map((_, Option.empty[String])), schema)
+      }
     if (pruned.isEmpty) {
       val schema = light.getOrElse(table(layer, name).schema)
       return spark.createDataFrame(
@@ -3695,8 +3717,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * filesystem); (2) execute the plan into the claimed immutable
     * `_v{N}` directory — the previous version stays live throughout, so
     * a refresh can read its own table; (3) atomically rename the
-    * `_VERSION` manifest (version + file list) into place — THE commit
-    * point for readers; (4) GC versions older than the immediately-
+    * `_VERSION` manifest (version + schema + file list) into place — THE
+    * commit point for readers; (4) GC versions older than the immediately-
     * previous one, plus pre-manifest legacy files and stale markers. A
     * crash before (3) leaves the old version committed; after (3) the
     * new one. Readers never see a partial or absent table.
@@ -3733,10 +3755,11 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     gcVersions(base)
   }
 
-  /** Write the immutable `_v{next}` data directory and its manifest tmp
-    * (per-file min/max stats recorded for `statsCols` — the data-skipping
-    * read path of [[tableWhere]]). No commit happens here — the previous
-    * version stays live. */
+  /** Write the immutable `_v{next}` data directory and its manifest tmp:
+    * the schema written, then the live files (per-file min/max stats
+    * recorded for `statsCols` — the data-skipping read path of
+    * [[tableWhere]]). No commit happens here — the previous version stays
+    * live. */
   private def writeVersion(base: Path, next: Int, df: DataFrame,
       statsCols: Seq[String] = Nil): Unit = {
     val dataDir = base.resolve(s"_v$next")
@@ -3748,8 +3771,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           .map(f => ManifestStats.FileEntry(f, Map.empty))
       else ManifestStats.collectStats(spark, dataDir.toString, statsCols, "")
         .map(e => e.copy(relPath = e.relPath.stripPrefix("/")))
+    // the schema just written rides the manifest, so readers never infer
+    // it from parquet footers (a Spark job per open)
+    val schemaLine = "#schema\t" +
+      java.net.URLEncoder.encode(df.schema.json, java.nio.charset.StandardCharsets.UTF_8)
     val tmp = base.resolve(s".$ManifestName.$next.tmp")
-    Files.write(tmp, (next.toString +: entries.map(_.render)).mkString("\n")
+    Files.write(tmp, (next.toString +: schemaLine +: entries.map(_.render)).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 

@@ -54,13 +54,21 @@ object Silver {
         Window.partitionBy(grain.map(col): _*).orderBy(order: _*)))
       .filter(col("rn") === 1).drop("rn")
 
-  /** Analytics report matrix → (header_names, row_values) long form. */
+  /** Analytics report matrix → (header_names, row_values) long form. Each
+    * payload is parsed ONCE, below the explode: the header names and the
+    * row array are projected from one `from_json` per payload, and the
+    * explode only carries them. Selected straight off `from_json` beside
+    * the explode, the header transform lands above the `Generate` and
+    * re-parses the whole payload for every exploded row — O(n²) in a
+    * report's rows. */
   def parseReport(raw: DataFrame): DataFrame = {
     val parsed = from_json(col("payload"), org.apache.spark.sql.types.DataType.fromDDL(Schemas.analyticsReportDdl),
       Map("primitivesAsString" -> "true"))
-    raw.select(
-      transform(parsed.getField("columnHeaders"), x => x.getField("name")).as("header_names") +:
-        explode_outer(parsed.getField("rows")).as("row_values") +:
+    raw.select(parsed.as("report") +: envelopeCols.map(col): _*)
+      .select(
+        transform(col("report.columnHeaders"), x => x.getField("name")).as("header_names") +:
+          col("report.rows").as("rows") +: envelopeCols.map(col): _*)
+      .select(col("header_names") +: explode_outer(col("rows")).as("row_values") +:
         envelopeCols.map(col): _*)
   }
 
@@ -573,7 +581,7 @@ object Silver {
   /** Every model [[refreshIncremental]] can merge (vs full recompute).
     * silver_videos depends on the SCD2 table's current flags and the
     * channel fact on silver_channels' top-1, so merge those dependencies
-    * first (Job does). */
+    * first ([[refreshParallel]]'s level order does). */
   val incrementalModels: Set[String] =
     latestWinsSpecs.keySet ++
       Set("silver_video_metadata_scd2", "silver_videos", "fact_channel_daily_metrics",
@@ -887,7 +895,8 @@ object Silver {
     * channel change means a full recompute re-stamps history (matching the
     * reference MV's semantics) while a stable channel (the overwhelmingly
     * common case — the API serves one `mine=true` channel) merges at
-    * new-data cost. Refresh silver_channels first (Job does). */
+    * new-data cost. Refresh silver_channels first ([[refreshParallel]]'s
+    * level order does). */
   def refreshChannelFactIncremental(lake: Lakehouse, sinceSnapshot: java.sql.Date): Unit = {
     val current = currentChannelFrame(lake)
     val existing = lake.table("silver", "fact_channel_daily_metrics")
@@ -1230,16 +1239,22 @@ object Silver {
   }
 
   /** Refresh with LEVEL-ORDER PARALLELISM: models are grouped by
-    * topological depth and each level's independent models materialize
+    * topological depth and each level's independent models refresh
     * concurrently (the reference runs dbt with `threads: 4` —
     * `dbt/profiles.yml:27`). Spark's scheduler interleaves the concurrent
     * jobs across executors, so independent MVs stop serializing behind one
     * another's stragglers; results are identical to [[refresh]] because
-    * models only ever read tables their *earlier level* wrote. */
-  def refreshParallel(lake: Lakehouse, subset: Option[Set[String]] = None): Seq[Seq[String]] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    * models only ever read tables their *earlier level* wrote.
+    *
+    * With `since`, every [[incrementalModels]] member MERGES the bronze
+    * partitions at or after that snapshot ([[refreshIncremental]]) and the
+    * rest recompute. [[Model.deps]] already orders what the merges read:
+    * the SCD2 table before silver_videos, silver_channels before the
+    * channel fact, the facts before dim_date, dim_country_reference before
+    * dim_country. Every model of a level settles before the next level
+    * starts or a failure is rethrown ([[settle]]). */
+  def refreshParallel(lake: Lakehouse, subset: Option[Set[String]] = None,
+      since: Option[java.sql.Date] = None): Seq[Seq[String]] = {
     val wanted = models.filter(m => subset.forall(_.contains(m.name)))
     val names = wanted.map(_.name).toSet
     // depth = longest dependency chain within the refresh set
@@ -1249,11 +1264,34 @@ object Silver {
         .foldLeft(-1)(math.max) + 1)
     val levels = topoSort(wanted).groupBy(depthOf).toSeq.sortBy(_._1).map(_._2)
     levels.map { level =>
-      Await.result(
-        Future.sequence(level.map(m => Future {
-          lake.materialize("silver", m.name, m.build(lake)); m.name
-        })), Duration.Inf)
+      settle(level.map(m => () => {
+        since.filter(_ => incrementalModels.contains(m.name)) match {
+          case Some(s) => refreshIncremental(lake, m.name, s)
+          case None => lake.materialize("silver", m.name, m.build(lake))
+        }
+        m.name
+      }))
     }
+  }
+
+  /** Run one level of independent work concurrently and wait until ALL of
+    * it has settled: a fail-fast await would leave the siblings of a
+    * failed task running into the next stage (gold, finalize, maintenance,
+    * even the next run). The first failure is rethrown with every other
+    * failure attached as suppressed, so a multi-model incident does not
+    * masquerade as a single-model one. Results come back in `work` order. */
+  private[pipeline] def settle[A](work: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import scala.util.{Failure, Try}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val settled = Await.result(
+      Future.sequence(work.map(w => Future(Try(w())))), Duration.Inf)
+    settled.collectFirst { case Failure(t) =>
+      settled.collect { case Failure(o) if o ne t => o }.foreach(t.addSuppressed)
+      throw t
+    }
+    settled.map(_.get)
   }
 
   private def topoSort(ms: Seq[Model]): Seq[Model] = {

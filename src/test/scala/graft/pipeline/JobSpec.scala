@@ -127,6 +127,70 @@ class JobSpec extends SparkSpec {
     assert(log.filter(col("run_status") === "success").count() == 2)
   }
 
+  /** Spark jobs started while `f` runs, counted by a listener; the bus is
+    * drained on both sides so no earlier or later job lands in the count. */
+  private def sparkJobs(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBusShim
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusShim.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; ListenerBusShim.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  /** A day-1 full run then a day-2 incremental run on one lake, with the
+    * Spark jobs each run started. */
+  private lazy val (twoDayLake, fullRunJobs, incrRunJobs) = {
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-jobs").toString)
+    val full = sparkJobs {
+      val r = Job.run(lake, DataClient, AnalyticsClient,
+        startDate = "2025-05-30", endDate = "2025-06-01",
+        now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "jobs-day1")
+      assert(r.status == "success", r.toString)
+    }
+    val incr = sparkJobs {
+      val r = Job.run(lake, DataClient, AnalyticsClient,
+        startDate = "2025-05-31", endDate = "2025-06-02", incremental = true,
+        now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "jobs-day2")
+      assert(r.status == "success", r.toString)
+    }
+    (lake, full, incr)
+  }
+
+  test("Job.run stays under its Spark-job ceiling: 100 full, 115 incremental") {
+    // the fixed cost of a run is per Spark job; the ceilings hold today's
+    // counts with a little headroom so per-table jobs cannot creep back
+    assert(fullRunJobs <= 100, s"full run started $fullRunJobs Spark jobs")
+    assert(incrRunJobs <= 115, s"incremental run started $incrRunJobs Spark jobs")
+  }
+
+  test("materialized tables open from their logged schema: same schema and rows, 0 Spark jobs") {
+    val lake = twoDayLake
+    // an empty frame materializes too: its schema must still round-trip
+    lake.materialize("gold", "empty_probe",
+      lake.table("gold", "gold_video_daily_summary").filter(lit(false)))
+    val tables = Seq("silver", "gold").flatMap(l => lake.tableNames(l).map(l -> _))
+    assert(tables.contains("gold" -> "empty_probe") && tables.size >= 20, tables.toString)
+    var opened = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = sparkJobs {
+      opened = tables.map { case (l, t) => lake.table(l, t) }
+      opened.foreach(_.schema)
+    }
+    assert(jobs == 0, s"opening ${tables.size} tables started $jobs Spark jobs")
+    tables.zip(opened).foreach { case ((l, t), df) =>
+      val inferred = spark.read.parquet(lake.currentDataDir(l, t).toString)
+      assert(df.schema == inferred.schema, s"$l.$t: logged schema != inferred schema")
+      assert(df.collect().map(_.toString).sorted.toSeq ==
+        inferred.collect().map(_.toString).sorted.toSeq, s"$l.$t: rows differ")
+    }
+    assert(lake.table("gold", "empty_probe").isEmpty)
+  }
+
   test("day-2 change-feed run equals a full recompute over the same bronze") {
     // the cdfRefresh mode: the six latest-wins models drain the bronze
     // change feed through durable cursors instead of snapshot-pruned merges

@@ -21,7 +21,7 @@ class PipelineSpec extends SparkSpec {
   private val vidHeaders = Seq(dim("video"), dim("day"), met("views"), met("likes"),
     met("comments"), met("estimatedMinutesWatched"), ("averageViewDuration", "METRIC", "FLOAT"))
 
-  private def ingestAll(): Unit = {
+  private def ingestAll(lake: Lakehouse = lake): Unit = {
     // ---- run 1: 2025-06-01 ----
     val ctx1 = Bronze.RunContext("run1", "req1", d("2025-06-01"), ts("2025-06-01 10:00:00"))
     Bronze.logRunStart(lake, ctx1, """{"mode":"auto"}""")
@@ -391,6 +391,147 @@ class PipelineSpec extends SparkSpec {
       val now = lake.table("silver", m.name).collect().map(_.toString).sorted.toSeq
       assert(now == before(m.name), s"${m.name} differs after parallel refresh")
     }
+  }
+
+  test("level-parallel incremental refresh equals the sequential merge order and a full recompute") {
+    // two lakes, identical bronze: one merges day 4 in the former
+    // hand-ordered sequence, the other through refreshParallel's levels
+    val seqLake = new Lakehouse(spark, Files.createTempDirectory("graft-inc-seq").toString)
+    val parLake = new Lakehouse(spark, Files.createTempDirectory("graft-inc-par").toString)
+    val since = d("2025-06-04")
+    Seq(seqLake, parLake).foreach { l =>
+      ingestAll(l)
+      Silver.refresh(l)
+      // day 4 touches every bronze source: a channel update, an SCD2
+      // change, re-reported and new dates, and a new value in every dim
+      val ctx4 = Bronze.RunContext("run4", "req4", since, ts("2025-06-04 10:00:00"))
+      Bronze.ingest(l, ctx4, _ => Map(
+        "channels_raw" -> Seq(channelPayload("UC_1", "Chan A4", 170, 14)),
+        "videos_raw" -> Seq(videosPayload(
+          videoItem("V1", "UC_1", "Title C", 25),
+          videoItem("V2", "UC_1", "Other", 50))),
+        "analytics_channel_daily_raw" -> Seq(report(chHeaders, Seq(
+          Seq("2025-06-01", "21", "4", "2", "11", "5", "1"),
+          Seq("2025-06-03", "30", "6", "3", "15", "6", "2")))),
+        "analytics_video_daily_raw" -> Seq(report(vidHeaders, Seq(
+          Seq("V1", "2025-05-31", "6", "1", "0", "3", "42.0"),
+          Seq("V2", "2025-06-03", "8", "1", "1", "4", "50.0")))),
+        "analytics_video_traffic_source_daily_raw" -> Seq(report(
+          Seq(dim("video"), dim("day"), dim("insightTrafficSourceType"), met("views")),
+          Seq(Seq("V1", "2025-06-03", "ext_url", "2")))),
+        "analytics_video_device_daily_raw" -> Seq(report(
+          Seq(dim("video"), dim("day"), dim("deviceType"), met("views")),
+          Seq(Seq("V2", "2025-06-03", "tablet", "1")))),
+        "analytics_video_country_daily_raw" -> Seq(report(
+          Seq(dim("video"), dim("day"), dim("country"), met("views")),
+          Seq(Seq("V1", "2025-06-03", "de", "3"))))))
+      Bronze.finalizeRun(l, "run4", "success", ts("2025-06-04 10:05:00"))
+    }
+    Silver.latestWinsSpecs.keys.foreach(n => Silver.refreshIncremental(seqLake, n, since))
+    Seq("silver_video_metadata_scd2", "silver_videos", "fact_channel_daily_metrics",
+        "dim_traffic_source", "dim_device", "dim_country", "dim_date")
+      .foreach(n => Silver.refreshIncremental(seqLake, n, since))
+    Silver.refreshParallel(seqLake,
+      Some(Silver.models.map(_.name).toSet -- Silver.incrementalModels))
+    val levels = Silver.refreshParallel(parLake, since = Some(since))
+    assert(levels.flatten.toSet == Silver.models.map(_.name).toSet)
+    assert(levels.size > 1 && levels.head.size > 1) // real parallelism in level 0
+    // every merge committed a new version (none fell back to a no-op)
+    Silver.incrementalModels.foreach(m =>
+      assert(parLake.tableVersion("silver", m) > 1, s"$m was not merged"))
+    def rows(l: Lakehouse, m: String) =
+      l.table("silver", m).collect().map(_.toString).sorted.toSeq
+    val parallel = Silver.models.map(m => m.name -> rows(parLake, m.name)).toMap
+    Silver.models.foreach(m => assert(parallel(m.name) == rows(seqLake, m.name),
+      s"${m.name}: level-parallel incremental != sequential incremental"))
+    assert(parallel("dim_country").exists(_.contains("Germany")))
+    Silver.refresh(seqLake)
+    Silver.models.foreach(m => assert(parallel(m.name) == rows(seqLake, m.name),
+      s"${m.name}: level-parallel incremental != full recompute"))
+  }
+
+  test("a failed level settles every sibling before rethrowing, others suppressed") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val thrown = intercept[IllegalStateException](Silver.settle(Seq(
+      () => throw new IllegalStateException("first"),
+      () => { Thread.sleep(300); finished.set(true) },
+      () => throw new IllegalArgumentException("second"))))
+    assert(finished.get, "settle rethrew before the slow sibling finished")
+    assert(thrown.getMessage == "first")
+    assert(thrown.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    assert(Silver.settle(Seq(() => 1, () => 2)) == Seq(1, 2))
+  }
+
+  test("parseReport parses each payload once, below the explode, with unchanged output") {
+    refreshed
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val raws = Seq("analytics_channel_daily_raw", "analytics_video_daily_raw",
+      "analytics_video_traffic_source_daily_raw", "analytics_video_country_daily_raw",
+      "analytics_video_device_daily_raw")
+    raws.foreach { t =>
+      val raw = lake.table("bronze", t)
+      val parsed = Silver.parseReport(raw)
+      // the former spelling: header names and the explode straight off
+      // from_json — the output reference
+      val report = from_json(col("payload"),
+        org.apache.spark.sql.types.DataType.fromDDL(Schemas.analyticsReportDdl),
+        Map("primitivesAsString" -> "true"))
+      val reference = raw.select(
+        transform(report.getField("columnHeaders"), x => x.getField("name")).as("header_names"),
+        explode_outer(report.getField("rows")).as("row_values"),
+        col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
+        col("schema_version"))
+      assert(parsed.columns.toSeq == reference.columns.toSeq)
+      val got = parsed.collect().map(_.toString).sorted.toSeq
+      assert(got.nonEmpty && got == reference.collect().map(_.toString).sorted.toSeq,
+        s"$t: parseReport output changed")
+      // executed plan: every from_json sits in the subtree BELOW the
+      // Generate; nothing at or above it parses a payload per row
+      val plan = parsed.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      def parses(p: SparkPlan) =
+        p.expressions.exists(_.find(_.prettyName == "from_json").isDefined)
+      val gen = plan.collectFirst { case g: GenerateExec => g }
+        .getOrElse(fail(s"$t: no Generate in\n$plan"))
+      val below = gen.child.collect { case p => p }.toSet
+      assert(gen.child.exists(parses), s"$t: no from_json below the Generate\n$plan")
+      val above = plan.collect { case p if !below.contains(p) => p }
+      assert(!above.exists(parses), s"$t: from_json at or above the Generate\n$plan")
+    }
+  }
+
+  test("one-query check suite: counts equal each check's own count, in Checks.all order") {
+    refreshed
+    // a copy of the refreshed silver and gold with offenders planted in
+    // several checks (bronze left out: required_objects offends too)
+    val bad = new Lakehouse(spark, Files.createTempDirectory("graft-badchecks").toString)
+    lake.tableNames("silver").foreach(t => bad.materialize("silver", t, lake.table("silver", t)))
+    def goldWith(t: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      bad.materialize("gold", t, f(lake.table("gold", t)))
+    goldWith("gold_channel_daily_summary")(_.withColumn("views", lit(-1L)))
+    goldWith("gold_video_daily_summary")(g => g.union(g))
+    goldWith("gold_video_country_daily_summary")(identity)
+    goldWith("gold_video_device_daily_summary")(g =>
+      g.union(g.limit(1).withColumn("device_type", lit("TOASTER"))))
+    goldWith("gold_video_traffic_source_daily_summary")(identity)
+    val asOf = d("2025-07-01") // both freshness-monitored marts lag
+    val results = Checks.run(bad, asOf)
+    val checks = Checks.all(asOf)
+    assert(results.map(r => (r._1, r._2)) == checks.map(c => (c.name, c.severity)))
+    checks.zip(results).foreach { case (c, (name, _, n)) =>
+      assert(n == c.run(bad).count(), s"$name: suite count $n != the check's own count")
+    }
+    val offending = results.filter(_._3 > 0).map(_._1).toSet
+    assert(Set("gold_video_daily_summary_unique", "gold_metrics_non_negative",
+      "gold_freshness_recency", "device_type_accepted_values",
+      "gold_video_device_daily_summary_device_type_relationship",
+      "required_objects_exist", "warn_new_traffic_source_ids").subsetOf(offending),
+      s"offending: $offending")
+    assert(results.find(_._1 == "warn_new_traffic_source_ids").get._3 == 1L)
+    assert(results.exists(_._3 == 0L)) // clean checks still report 0
   }
 
   test("run_context_log: finalize updates the run row in place") {
